@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** Waits until the listener bus has delivered every posted event, so a
+  * span's counters are complete when it closes (`listenerBus` is
+  * package-private to Spark).
+  */
+object BenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
